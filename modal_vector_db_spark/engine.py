@@ -69,7 +69,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         embedder_kwargs: Optional[dict] = None,
         create_new_table: bool = False,
         warehouse: str | None = None,
-        write_mode: str = "anti_join",
         versioned: bool = False,
         stats_fields: Optional[dict | Sequence[str]] = None,
         id_fields: Optional[Sequence[str]] = None,
@@ -79,13 +78,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         ):
             raise ValueError(
                 f"id_fields must be a non-empty sequence of field names, got {id_fields!r}"
-            )
-        if write_mode not in ("anti_join", "merge"):
-            raise ValueError(f"write_mode must be 'anti_join' or 'merge', got {write_mode!r}")
-        if versioned and write_mode == "merge":
-            raise ValueError(
-                "versioned=True uses the manifest-log layout; Delta MERGE "
-                "(write_mode='merge') manages its own log — pick one"
             )
         if stats_fields and not versioned:
             raise ValueError(
@@ -99,7 +91,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self.embedding_dim = embedding_dim
         self.embedder_name = embedder_name
         self.embedder_kwargs = embedder_kwargs or {}
-        self.write_mode = write_mode
         self.versioned = versioned
         # Table-level content-identity declaration: when set, ids hash only
         # this metadata SUBSET (uuid5 of its canonical JSON) on EVERY path
@@ -680,9 +671,8 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         then the broadcast build side of the final anti-join.  Net: the base
         table is scanned once (id column only) and never shuffled, both
         joins broadcast the small side.  Single-writer semantics, same as
-        the reference's one DB container; ``write_mode="merge"`` swaps this
-        for a Delta Lake MERGE (:meth:`_merge_append`) for concurrent
-        writers.
+        the reference's one DB container; ``versioned=True`` tables take the
+        concurrent-writer CAS loop instead (:meth:`_versioned_cas_append`).
         """
         # Re-validate the sidecar at the WRITE boundary, not only at
         # construction: a handle built while the table did not yet exist
@@ -692,9 +682,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         # — the exact failure the sidecar guard exists to prevent.
         self._check_meta()
         self._write_meta()
-        if self.write_mode == "merge":
-            self._merge_append(batch)
-            return
         # Every stored row must carry stats columns consistent with its
         # metadata: footer min/max skip NULLs, so a row written WITHOUT them
         # would not widen its file's recorded range and a later pruned
@@ -867,43 +854,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         ) from last_err
 
 
-    def _merge_append(self, batch: DataFrame) -> None:
-        """Multi-writer upsert: Delta Lake ``MERGE … WHEN NOT MATCHED THEN
-        INSERT`` — the ACID generalization of ``ON CONFLICT DO NOTHING``
-        (reference ``duckvdb.py:57-61``) for CONCURRENT writers.
-
-        The anti-join default computes the conflict set against a snapshot,
-        so two simultaneous batches can both miss each other's rows and
-        double-insert; Delta's optimistic concurrency control serializes
-        the two MERGE commits instead (the loser retries against the
-        winner's snapshot), giving idempotency under concurrency.  Gated on
-        the optional ``delta-spark`` package (absent in this environment —
-        ``tests/test_engine.py`` pins both the clear failure here and, when
-        the package IS importable, the concurrent-batch semantics)."""
-        try:
-            from delta.tables import DeltaTable  # type: ignore
-        except ImportError as e:
-            raise NotImplementedError(
-                "write_mode='merge' requires the delta-spark package "
-                "(Delta Lake MERGE is the ACID multi-writer upsert); install "
-                "delta-spark and enable the Delta SQL extension"
-            ) from e
-        batch = batch.dropDuplicates(["id"])
-        # same before-commit ordering as the other insert paths — extra
-        # bits under a lost MERGE race, never missing ones
-        self._sync_bloom_for_append(batch)
-        path = catalog.db_path(self.name, self.warehouse)
-        if not DeltaTable.isDeltaTable(self.spark, path):
-            batch.write.format("delta").mode("append").save(path)
-            return
-        (
-            DeltaTable.forPath(self.spark, path)
-            .alias("t")
-            .merge(batch.alias("b"), "t.id = b.id")
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
     # -- flagship read path ------------------------------------------------
     def _query_vec(self, query: str | Sequence[float]) -> list[float]:
         """Embed text driver-side, or validate a PRECOMPUTED vector's
@@ -919,6 +869,142 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 f"{self.embedding_dim}"
             )
         return qv
+
+    # -- read front-end: what every read method resolves the same way -----
+    @staticmethod
+    def _results(rows) -> list[Result]:
+        """Collected ``(id, metadata, distance)`` rows as :class:`Result`s."""
+        return [
+            Result(id=r["id"], metadata=json.loads(r["metadata"]), distance=r["distance"])
+            for r in rows
+        ]
+
+    def _index_snapshot(self, version: int | None, use_index: bool) -> int | None:
+        """The ``__ivf`` manifest version an indexed read AS OF base
+        ``version`` serves, from the verified stamp history
+        (:meth:`_ivf_version_for_base`); ``None`` for head and unindexed
+        reads.  ``version`` needs a versioned table.  A commit with no
+        verified pair (pre-index commits, raced syncs, post-mutation
+        rebuilds) fails loudly instead of serving the wrong snapshot."""
+        if version is None:
+            return None
+        self._require_versioned()
+        if not use_index:
+            return None
+        ivf_version = self._ivf_version_for_base(version)
+        if ivf_version is None:
+            raise ValueError(
+                f"no verified index snapshot for version {version} of "
+                f"table {self.name!r}: the stamp history maps only "
+                "commits whose index sync verified, and mutations/"
+                "rebuilds reset it — run the exact path (omit "
+                "use_index)"
+            )
+        return ivf_version
+
+    def _nearest_clusters(self, qvecs, nprobe: int | None) -> list[list[int]]:
+        """Each query vector's ``nprobe`` nearest IVF clusters (``nprobe``
+        resolves explicit > calibrated > 4)."""
+        _, ivf = self._load_ivf()
+        nprobe = self._resolve_nprobe(nprobe)
+        return [ivf.nearest_centroids(qv, nprobe) for qv in qvecs]
+
+    def _ivf_source(
+        self, clusters, filters: Optional[dict], ivf_version: int | None
+    ) -> DataFrame:
+        """The ``__ivf`` rows of ``clusters`` — partition-pruned, read at
+        ``ivf_version`` (else the head) and restricted by ``filters``."""
+        src = self._read_ivf_probes(clusters, version=ivf_version).filter(
+            F.col("cluster_id").isin(clusters)
+        )
+        return src.filter(compile_filters(filters)) if filters else src
+
+    def _vector_topk_multi(
+        self,
+        qvecs: list[list[float]],
+        k: int,
+        src: DataFrame | None,
+        filters: Optional[dict],
+        nprobe: int | None,
+        ivf_version: int | None,
+    ) -> tuple[DataFrame, DataFrame]:
+        """Per-query top-``k`` ``(q_id, id, distance)`` for many query
+        vectors in ONE job, plus the frame it ranked.  ``src`` (the
+        filtered base) is brute-forced with a Partial-mode WindowGroupLimit
+        (``operators/ann.py:brute_force_topk_multi``).  ``src=None`` probes
+        the IVF layout instead: the scan prunes to the UNION of every
+        query's clusters and a broadcast (q_id, cluster_id) join keeps each
+        query to its own (``operators/ann.py:ivf_topk_multi``)."""
+        from modal_vector_db_spark.operators.ann import (
+            brute_force_topk_multi,
+            ivf_topk_multi,
+        )
+
+        if src is not None:
+            qdf = self.spark.createDataFrame(
+                list(enumerate(qvecs)), "q_id int, q_vec array<double>"
+            )
+            return brute_force_topk_multi(src, qdf, k=k, id_col="id"), src
+        probe_rows = [
+            (i, int(c), qv)
+            for i, (qv, cs) in enumerate(zip(qvecs, self._nearest_clusters(qvecs, nprobe)))
+            for c in cs
+        ]
+        probes = self.spark.createDataFrame(
+            probe_rows, "q_id int, cluster_id int, q_vec array<double>"
+        )
+        src = self._ivf_source(sorted({c for _, c, _ in probe_rows}), filters, ivf_version)
+        return ivf_topk_multi(src, probes, k=k, id_col="id"), src
+
+    def _hybrid_inputs(
+        self,
+        terms: Sequence[str],
+        filters: Optional[dict],
+        version: int | None,
+        text_field: str,
+        use_text_index: bool,
+        use_index: bool,
+        use_graph_index: bool,
+    ):
+        """Check a hybrid read's channel options and resolve what its
+        channels read: ``(src, ivf_version, text_index)`` — the filtered
+        base AS OF ``version``, the IVF snapshot (:meth:`_index_snapshot`),
+        and for ``use_text_index`` the postings of ``terms``'s buckets with
+        their BM25 calibration kwargs (``None``: the lexical channel scans
+        ``src``)."""
+        if use_graph_index and use_index:
+            raise ValueError(
+                "use_graph_index and use_index are mutually exclusive — "
+                "pick ONE vector channel"
+            )
+        if use_graph_index and version is not None:
+            raise ValueError(
+                "use_graph_index=True is head-only: the graph epoch mirrors "
+                "the head commit (run the scan/IVF path for time travel)"
+            )
+        if use_text_index and filters:
+            raise ValueError(
+                "use_text_index=True cannot apply filters: postings carry "
+                "no metadata and the BM25 calibration stats cover the "
+                "WHOLE corpus — use the scan path for filtered hybrid"
+            )
+        ivf_version = self._index_snapshot(version, use_index)
+        src = self._filtered_source(filters, version=version)
+        if filters:
+            src = src.filter(compile_filters(filters))
+        if not use_text_index:
+            return src, ivf_version, None
+        from modal_vector_db_spark.operators.hybrid import term_buckets
+
+        # version=N → the verified ledger pair for N (raises loudly if
+        # none); open mutation window → the last verified head pair;
+        # otherwise live head stats + head postings
+        pv, n_cal, dl_cal, buckets = self._resolve_text_index_read(version, text_field)
+        postings = self._read_text_buckets(term_buckets(terms, buckets), version=pv)
+        stats = {
+            "n": n_cal, "avgdl": dl_cal / max(n_cal, 1.0), "id_col": "id", "buckets": buckets,
+        }
+        return src, ivf_version, (postings, stats)
 
     def query(
         self,
@@ -959,27 +1045,12 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         """
         if compressed and not use_index:
             raise ValueError("compressed=True requires use_index=True (build with create_index(pq_m=...))")
-        ivf_version: int | None = None
-        if version is not None:
-            self._require_versioned()
-            if use_index:
-                ivf_version = self._ivf_version_for_base(version)
-                if ivf_version is None:
-                    raise ValueError(
-                        f"no verified index snapshot for version {version} of "
-                        f"table {self.name!r}: the stamp history maps only "
-                        "commits whose index sync verified, and mutations/"
-                        "rebuilds reset it — run the exact path (omit "
-                        "use_index)"
-                    )
+        ivf_version = self._index_snapshot(version, use_index)
         qv = self._query_vec(query)
         if use_index:
-            ivf_table, ivf = self._load_ivf()
-            nprobe = self._resolve_nprobe(nprobe)
-            probes = ivf.nearest_centroids(qv, nprobe)
-            src = self._read_ivf_probes(probes, version=ivf_version).filter(
-                F.col("cluster_id").isin(probes)
-            )
+            (probes,) = self._nearest_clusters([qv], nprobe)
+            # knn() below applies the filters (pre-distance, pushed down)
+            src = self._ivf_source(probes, None, ivf_version)
             if compressed:
                 # IVF+PQ: ADC over the code column inside the probed
                 # partitions picks k·refine_factor candidates, then the
@@ -1026,11 +1097,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         )
         if as_dataframe:
             return out
-        return [
-            Result(id=r["id"], metadata=json.loads(r["metadata"]), distance=r["distance"])
-            for r in out.collect()
-        ]
-
+        return self._results(out.collect())
 
     def query_batch(
         self,
@@ -1060,55 +1127,21 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         ``version``: time-travel batch — top-k AS OF that commit (same
         contract as :meth:`query`: versioned tables only; composes with
         ``use_index`` via the verified stamp history, failing loudly for
-        commits with no verified index snapshot)."""
+        commits with no verified index snapshot).
+
+        A batch of one is no substitute for :meth:`query`: on a 2000-row
+        table it runs 5 Spark jobs to the single-query plan's 3 (IVF: 9 to
+        7) and takes 1.6-1.8× as long, so that plan stays."""
         if not queries:
             raise ValueError("query_batch needs at least one query")
-        ivf_version: int | None = None
-        if version is not None:
-            self._require_versioned()
-            if use_index:
-                ivf_version = self._ivf_version_for_base(version)
-                if ivf_version is None:
-                    raise ValueError(
-                        f"no verified index snapshot for version {version} of "
-                        f"table {self.name!r}: the stamp history maps only "
-                        "commits whose index sync verified, and mutations/"
-                        "rebuilds reset it — run the exact path (omit "
-                        "use_index)"
-                    )
-        qvecs = []
-        for q in queries:
-            qvecs.append(self._query_vec(q))
-        if use_index:
-            from modal_vector_db_spark.operators.ann import ivf_topk_multi
-
-            ivf_table, ivf = self._load_ivf()
-            nprobe = self._resolve_nprobe(nprobe)
-            probe_rows = [
-                (i, int(c), qv)
-                for i, qv in enumerate(qvecs)
-                for c in ivf.nearest_centroids(qv, nprobe)
-            ]
-            probes = self.spark.createDataFrame(
-                probe_rows, "q_id int, cluster_id int, q_vec array<double>"
-            )
-            probed_clusters = sorted({c for _, c, _ in probe_rows})
-            src = self._read_ivf_probes(probed_clusters, version=ivf_version).filter(
-                F.col("cluster_id").isin(probed_clusters)
-            )
-            if filters:
-                src = src.filter(compile_filters(filters))
-            out = ivf_topk_multi(src, probes, k=k, id_col="id")
-        else:
-            from modal_vector_db_spark.operators.ann import brute_force_topk_multi
-
-            qdf = self.spark.createDataFrame(
-                list(enumerate(qvecs)), "q_id int, q_vec array<double>"
-            )
+        ivf_version = self._index_snapshot(version, use_index)
+        qvecs = [self._query_vec(q) for q in queries]
+        src = None
+        if not use_index:
             src = self._filtered_source(filters, version=version)
             if filters:
                 src = src.filter(compile_filters(filters))
-            out = brute_force_topk_multi(src, qdf, k=k, id_col="id")
+        out, src = self._vector_topk_multi(qvecs, k, src, filters, nprobe, ivf_version)
         # The (Q×k)-row result is the build side of the metadata join —
         # hint it explicitly (consistent with the insert/conflict paths)
         # rather than relying on AQE to notice it is tiny.
@@ -1174,64 +1207,25 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         filtered beam.  Mutually exclusive with ``use_index`` and
         head-only (the graph epoch mirrors the head)."""
         from modal_vector_db_spark.functions.distance import cosine_distance, vector_lit
-        from modal_vector_db_spark.operators.hybrid import bm25_scores, rrf_fuse
+        from modal_vector_db_spark.operators.hybrid import (
+            bm25_from_postings,
+            bm25_scores,
+            rrf_fuse,
+        )
 
         terms = [t for t in query.lower().split() if t]
         if not terms:
             raise ValueError("query_hybrid needs a non-empty text query")
-        if use_graph_index and use_index:
-            raise ValueError(
-                "use_graph_index and use_index are mutually exclusive — "
-                "pick ONE vector channel"
-            )
-        if use_graph_index and version is not None:
-            raise ValueError(
-                "use_graph_index=True is head-only: the graph epoch mirrors "
-                "the head commit (run the scan/IVF path for time travel)"
-            )
-        if version is not None:
-            self._require_versioned()
-        src = self._filtered_source(filters, version=version)
-        if filters:
-            src = src.filter(compile_filters(filters))
-        if use_text_index:
-            if filters:
-                raise ValueError(
-                    "use_text_index=True cannot apply filters: postings carry "
-                    "no metadata and the BM25 calibration stats cover the "
-                    "WHOLE corpus — use the scan path for filtered hybrid"
-                )
-            if version is not None and not self.versioned:
-                raise ValueError(
-                    "use_text_index=True with version= requires a versioned "
-                    "table (the snapshot ledger lives on the manifest log)"
-                )
-            from modal_vector_db_spark.operators.hybrid import (
-                bm25_from_postings,
-                term_buckets,
-            )
-
-            # version=N → the verified ledger pair for N (raises loudly if
-            # none); open mutation window → the last verified head pair;
-            # otherwise live head stats + head postings
-            pv, n_cal, dl_cal, buckets = self._resolve_text_index_read(
-                version, text_field
-            )
-            postings = self._read_text_buckets(
-                term_buckets(terms, buckets), version=pv
-            )
-            lex = bm25_from_postings(
-                postings,
-                terms,
-                n=n_cal,
-                avgdl=dl_cal / max(n_cal, 1.0),
-                id_col="id",
-                buckets=buckets,
-            )
-        else:
+        src, ivf_version, text_index = self._hybrid_inputs(
+            terms, filters, version, text_field, use_text_index, use_index, use_graph_index
+        )
+        if text_index is None:
             # THE _text_docs projection (never inlined: postings must
             # tokenize what the scan tokenizes)
             lex = bm25_scores(self._text_docs(src, text_field), terms, id_col="id")
+        else:
+            postings, stats = text_index
+            lex = bm25_from_postings(postings, terms, **stats)
         qv = [float(v) for v in self._embedder.embed(query)]
         if use_graph_index:
             # graph beam as the vector channel: top_n candidates per the
@@ -1239,29 +1233,12 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
             vec = self._graph_topk_df(
                 [qv], top_n, ef_search, nprobe, filters
             ).select("id", "distance")
-        elif use_index:
-            ivf_version: int | None = None
-            if version is not None:
-                ivf_version = self._ivf_version_for_base(version)
-                if ivf_version is None:
-                    raise ValueError(
-                        f"no verified index snapshot for version {version} of "
-                        f"table {self.name!r} — run the scan path (omit "
-                        "use_index)"
-                    )
-            ivf_table, ivf = self._load_ivf()
-            nprobe = self._resolve_nprobe(nprobe)
-            probes = ivf.nearest_centroids(qv, nprobe)
-            vsrc = self._read_ivf_probes(probes, version=ivf_version).filter(
-                F.col("cluster_id").isin(probes)
-            )
-            if filters:
-                vsrc = vsrc.filter(compile_filters(filters))
-            vec = vsrc.select(
-                "id", cosine_distance(F.col("embedding"), vector_lit(qv)).alias("distance")
-            )
         else:
-            vec = src.select(
+            vsrc = src
+            if use_index:
+                (probes,) = self._nearest_clusters([qv], nprobe)
+                vsrc = self._ivf_source(probes, filters, ivf_version)
+            vec = vsrc.select(
                 "id", cosine_distance(F.col("embedding"), vector_lit(qv)).alias("distance")
             )
         fused = rrf_fuse(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
@@ -1272,11 +1249,7 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         )
         if as_dataframe:
             return out
-        rows = sorted(out.collect(), key=lambda r: (-r["distance"], r["id"]))
-        return [
-            Result(id=r["id"], metadata=json.loads(r["metadata"]), distance=r["distance"])
-            for r in rows
-        ]
+        return self._results(sorted(out.collect(), key=lambda r: (-r["distance"], r["id"])))
 
     def query_hybrid_batch(
         self,
@@ -1318,8 +1291,11 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         restricts BOTH channels before scoring for every query in the
         batch (verified stamp history; the graph channel is head-only
         and exclusive with ``use_index``; ``use_text_index`` is
-        head-only and filter-free — postings carry no metadata)."""
-        from modal_vector_db_spark.functions.distance import cosine_distance, vector_lit
+        head-only and filter-free — postings carry no metadata).
+
+        A batch of one is no substitute for :meth:`query_hybrid`: on a
+        2000-row table it runs 18 Spark jobs to the single-query plan's 11
+        and takes 1.5× as long, so that plan stays."""
         from modal_vector_db_spark.operators.hybrid import (
             bm25_from_postings_multi,
             bm25_scores_multi,
@@ -1338,94 +1314,25 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
                 f"queries at positions {empties} have no terms"
             )
         pairs = sorted({(i, t) for i, ts in enumerate(per_q) for t in ts})
-        if use_graph_index and use_index:
-            raise ValueError(
-                "use_graph_index and use_index are mutually exclusive — "
-                "pick ONE vector channel"
-            )
-        if use_graph_index and version is not None:
-            raise ValueError(
-                "use_graph_index=True is head-only: the graph epoch mirrors "
-                "the head commit (run the scan/IVF path for time travel)"
-            )
-        if version is not None:
-            self._require_versioned()
-        src = self._filtered_source(filters, version=version)
-        if filters:
-            src = src.filter(compile_filters(filters))
-        if use_text_index:
-            if filters:
-                raise ValueError(
-                    "use_text_index=True cannot apply filters: postings carry "
-                    "no metadata and the BM25 calibration stats cover the "
-                    "WHOLE corpus — use the scan path for filtered hybrid"
-                )
-            if version is not None and not self.versioned:
-                raise ValueError(
-                    "use_text_index=True with version= requires a versioned "
-                    "table (the snapshot ledger lives on the manifest log)"
-                )
-            from modal_vector_db_spark.operators.hybrid import term_buckets
-
-            pv, n_cal, dl_cal, buckets = self._resolve_text_index_read(
-                version, text_field
-            )
-            all_terms = sorted({t for _, t in pairs})
-            postings = self._read_text_buckets(
-                term_buckets(all_terms, buckets), version=pv
-            )
-            lex = bm25_from_postings_multi(
-                postings,
-                pairs,
-                n=n_cal,
-                avgdl=dl_cal / max(n_cal, 1.0),
-                id_col="id",
-                buckets=buckets,
-            )
-        else:
+        src, ivf_version, text_index = self._hybrid_inputs(
+            [t for _, t in pairs], filters, version, text_field,
+            use_text_index, use_index, use_graph_index,
+        )
+        if text_index is None:
             # same rule as query_hybrid: the ONE _text_docs projection
             lex = bm25_scores_multi(self._text_docs(src, text_field), pairs, id_col="id")
+        else:
+            postings, stats = text_index
+            lex = bm25_from_postings_multi(postings, pairs, **stats)
         qvecs = [[float(v) for v in self._embedder.embed(q)] for q in queries]
         if use_graph_index:
             vec = self._graph_topk_df(
                 qvecs, top_n, ef_search, nprobe, filters
             ).select("q_id", "id", "distance")
-        elif use_index:
-            from modal_vector_db_spark.operators.ann import ivf_topk_multi
-
-            ivf_version: int | None = None
-            if version is not None:
-                ivf_version = self._ivf_version_for_base(version)
-                if ivf_version is None:
-                    raise ValueError(
-                        f"no verified index snapshot for version {version} of "
-                        f"table {self.name!r} — run the scan path (omit "
-                        "use_index)"
-                    )
-            ivf_table, ivf = self._load_ivf()
-            nprobe = self._resolve_nprobe(nprobe)
-            probe_rows = [
-                (i, int(c), qv)
-                for i, qv in enumerate(qvecs)
-                for c in ivf.nearest_centroids(qv, nprobe)
-            ]
-            probes = self.spark.createDataFrame(
-                probe_rows, "q_id int, cluster_id int, q_vec array<double>"
-            )
-            probed_clusters = sorted({c for _, c, _ in probe_rows})
-            vsrc = self._read_ivf_probes(probed_clusters, version=ivf_version).filter(
-                F.col("cluster_id").isin(probed_clusters)
-            )
-            if filters:
-                vsrc = vsrc.filter(compile_filters(filters))
-            vec = ivf_topk_multi(vsrc, probes, k=top_n, id_col="id")
         else:
-            from modal_vector_db_spark.operators.ann import brute_force_topk_multi
-
-            qdf = self.spark.createDataFrame(
-                list(enumerate(qvecs)), "q_id int, q_vec array<double>"
+            vec, _ = self._vector_topk_multi(
+                qvecs, top_n, None if use_index else src, filters, nprobe, ivf_version
             )
-            vec = brute_force_topk_multi(src, qdf, k=top_n, id_col="id")
         fused = rrf_fuse_multi(lex, vec, id_col="id", top_n=top_n, k=k, k0=k0)
         return F.broadcast(fused).join(src.select("id", "metadata"), "id").select(
             "q_id", "id", "metadata", F.col("score").alias("distance")
@@ -1438,7 +1345,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         write path is single-writer by contract.  On a versioned table this
         is just another commit (``replace``): readers of older versions keep
         their small files until :meth:`vacuum`."""
-        self._require_rewritable()
         if self.versioned:
             import math
 
@@ -1724,22 +1630,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         self.items().createOrReplaceTempView(self.name)
         return self.spark.sql(query)
 
-    def _require_rewritable(self) -> None:
-        """Mutation/maintenance paths rewrite the table directory with
-        plain parquet files; on a ``write_mode='merge'`` table that
-        destroys the Delta log (the swap carries no ``_delta_log``), and
-        the NEXT insert would silently blind-append — duplicating content
-        the MERGE mode exists to dedup.  Fail loudly instead."""
-        if self.write_mode == "merge":
-            raise ValueError(
-                "delete/update/compact/reembed rewrite the table directory "
-                "with plain parquet, which would destroy the Delta log a "
-                "write_mode='merge' table depends on (the next MERGE "
-                "append degrades to a blind append and duplicates "
-                "content) — run mutations through Delta itself or use the "
-                "default write_mode"
-            )
-
     def delete(self, filters: dict, tombstone: bool | None = None) -> int:
         """Remove every row matching ``filters`` (same DSL as :meth:`query`);
         returns the count removed.  The takedown/right-to-erasure operation
@@ -1771,7 +1661,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         from a row's metadata) are KEPT — a delete must never remove rows it
         cannot positively match.  ``filters`` must be non-empty: clearing a
         table is ``create_new_table=True``, not an accidental match-all."""
-        self._require_rewritable()
         if not filters:
             raise ValueError(
                 "delete() requires non-empty filters; to clear the table, "
@@ -1927,7 +1816,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         rows re-add through the replay-safe insert sync); mass updates
         drop it for rebuild.
         """
-        self._require_rewritable()
         if not filters:
             raise ValueError("update() requires non-empty filters")
         if not patch:
@@ -2154,7 +2042,6 @@ class VectorDB(IvfIndexMixin, TextIndexMixin, BloomFilterMixin, GraphIndexMixin)
         instance's embedder/dim switch to the new configuration so
         subsequent queries embed in the new space.  Returns rows
         re-embedded."""
-        self._require_rewritable()
         new_name = embedder_name or self.embedder_name
         new_dim = embedding_dim or self.embedding_dim
         new_kwargs = embedder_kwargs if embedder_kwargs is not None else self.embedder_kwargs

@@ -810,11 +810,7 @@ class GraphIndexMixin:
 
         meta = self._check_graph_epoch()
         efs = self._resolve_ef_search(ef_search, meta)
-        _, ivf = self._load_ivf()
-        np_resolved = self._resolve_nprobe(nprobe)
-        probes = {
-            i: ivf.nearest_centroids(qv, np_resolved) for i, qv in enumerate(qvecs)
-        }
+        probes = dict(enumerate(self._nearest_clusters(qvecs, nprobe)))
         graph = self._cat.read_table(self.spark, self.name + "__hnsw", self.warehouse)
         nodes = self._cat.read_table(
             self.spark, self.name + "__hnsw_nodes", self.warehouse
@@ -869,8 +865,6 @@ class GraphIndexMixin:
         commit, plain tables the row count, both the IVF generation —
         and inserts/deletes MAINTAIN the pins incrementally, so only
         replace-shaped mutations demand a rebuild."""
-        from modal_vector_db_spark.engine import Result
-
         qv = self._query_vec(query)
         out = (
             self._graph_topk_df([qv], k, ef_search, nprobe, filters)
@@ -879,10 +873,7 @@ class GraphIndexMixin:
         )
         if as_dataframe:
             return out
-        return [
-            Result(id=r["id"], metadata=json.loads(r["metadata"]), distance=r["distance"])
-            for r in out.collect()
-        ]
+        return self._results(out.collect())
 
     def query_graph_batch(
         self,

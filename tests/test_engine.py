@@ -208,48 +208,6 @@ def test_insert_rejects_wrong_dim(spark, tmp_path):
         db.insert([{"a": 1}], embeddings=[np.zeros(16, dtype=np.float32)])
 
 
-def test_merge_mode_without_delta_raises_cleanly(spark, tmp_path):
-    """write_mode='merge' on an env without delta-spark must fail with a
-    NotImplementedError NAMING the missing dep — at insert time, not with
-    an opaque ImportError from inside the write path."""
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark present: covered by test_merge_mode_concurrent_idempotency")
-    except ImportError:
-        pass
-    db = VectorDB(spark, "mergedb", embedding_dim=8,
-                  warehouse=str(tmp_path / "whm"), create_new_table=True,
-                  write_mode="merge")
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        db.insert([{"a": 1}], embed_field="a")
-
-
-def test_merge_mode_rejects_unknown_mode(spark, tmp_path):
-    with pytest.raises(ValueError, match="write_mode"):
-        VectorDB(spark, "badmode", warehouse=str(tmp_path / "whb"), write_mode="upsert")
-
-
-def test_merge_mode_concurrent_idempotency(spark, tmp_path):
-    """Delta MERGE semantics (runs only when delta-spark is importable):
-    two overlapping batches written through write_mode='merge' must merge
-    by id — the ON CONFLICT DO NOTHING contract under the ACID path."""
-    pytest.importorskip("delta", reason="delta-spark not installed in this env")
-    db = VectorDB(spark, "mergedb2", embedding_dim=8,
-                  warehouse=str(tmp_path / "whm2"), create_new_table=True,
-                  write_mode="merge")
-    b1 = [{"n": i} for i in range(20)]
-    b2 = [{"n": i} for i in range(10, 30)]  # overlaps b1 on 10..19
-    db.insert(b1, embed_field="n")
-    db.insert(b2, embed_field="n")
-    from delta.tables import DeltaTable
-    from modal_vector_db_spark.sources import catalog as C
-
-    merged = DeltaTable.forPath(spark, C.db_path("mergedb2", str(tmp_path / "whm2"))).toDF()
-    assert merged.count() == 30
-    assert merged.select("id").distinct().count() == 30
-
-
 @pytest.mark.slow
 def test_compact_merges_small_files(spark, tmp_path):
     """20 single-row insert batches fragment the table to ~20 files;

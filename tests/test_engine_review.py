@@ -1,5 +1,5 @@
 """Round-9 engine review findings, pinned: stale-index drop on bulk
-load, query/bulk-load dim validation, merge-mode mutation gate,
+load, query/bulk-load dim validation,
 table-level id_fields identity, maintenance-op ledger marks, and the
 counter-shaped __ivf mutation window."""
 
@@ -60,18 +60,6 @@ def test_load_from_parquet_validates_dim_and_drops_stale_index(spark, tmp_path):
     with pytest.raises(Exception, match="[Ii]ndex"):
         db.query("doc number 3", k=2, use_index=True)
     assert len(db.query("doc number 3", k=2)) == 2  # exact path fine
-
-
-def test_merge_mode_mutations_refused(spark, tmp_path):
-    db = _db(spark, tmp_path, write_mode="merge")
-    for fn in (
-        lambda: db.delete({"n": 1}),
-        lambda: db.update({"n": 1}, {"q": "x"}),
-        lambda: db.compact(),
-        lambda: db.reembed(embedder_name="HashingEmbedder"),
-    ):
-        with pytest.raises(ValueError, match="Delta log"):
-            fn()
 
 
 def test_id_fields_table_identity(spark, tmp_path):

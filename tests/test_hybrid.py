@@ -184,3 +184,23 @@ def test_hybrid_batch_filters_match_single(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="cannot apply filters"):
         db.query_hybrid_batch(qs, k=3, filters=flt, use_text_index=True)
+
+
+@pytest.mark.parametrize("method", ["query_hybrid", "query_hybrid_batch"])
+def test_hybrid_channel_option_checks(spark, tmp_path, method):
+    """Both hybrid methods refuse the same invalid channel combinations,
+    before reading anything (the table here holds no data or index)."""
+    from modal_vector_db_spark.engine import VectorDB
+
+    db = VectorDB(
+        spark, "hybchk", embedding_dim=8, warehouse=str(tmp_path),
+        create_new_table=True,
+    )
+    call = getattr(db, method)
+    q = "spark merge" if method == "query_hybrid" else ["spark merge"]
+    with pytest.raises(ValueError, match="mutually exclusive"):
+        call(q, k=3, use_index=True, use_graph_index=True)
+    with pytest.raises(ValueError, match="head-only"):
+        call(q, k=3, use_graph_index=True, version=1)
+    with pytest.raises(ValueError, match="cannot apply filters"):
+        call(q, k=3, filters={"grp": 1}, use_text_index=True)

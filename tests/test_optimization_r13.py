@@ -150,6 +150,8 @@ def test_static_chain_broadcasts_contribs(spark, monkeypatch):
     from modal_vector_db_spark.operators import pagerank as PR
 
     monkeypatch.setenv("SPARK_GRAFT_PR_PLAN_DUMP", "1")
+    # the static scope is the precondition under test: pin it explicitly
+    monkeypatch.setattr(PR, "_STATIC_CHAIN_MAX_NODES", 200_000)
     edges = [(i, (i + 1) % 30) for i in range(30)] + [(i, i % 5) for i in range(30)]
     df = spark.createDataFrame(edges, "src long, dst long")
     out = PR.pagerank(df, iters=5, materialize=True)

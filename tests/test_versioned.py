@@ -84,8 +84,6 @@ def test_versioned_vacuum_bounds_storage(spark, tmp_path):
 
 
 def test_versioned_guardrails(spark, tmp_path):
-    with pytest.raises(ValueError, match="merge"):
-        VectorDB(spark, "x", versioned=True, write_mode="merge", warehouse=str(tmp_path))
     plain = VectorDB(
         spark, "plaindb", embedding_dim=16, create_new_table=True, warehouse=str(tmp_path)
     )
@@ -343,6 +341,10 @@ def test_time_travel_query(spark, tmp_path):
         db.query("3", k=3, version=v1, use_index=True)
     with pytest.raises(ValueError, match="verified index snapshot"):
         db.query_batch(["3"], k=3, version=v1, use_index=True)
+    with pytest.raises(ValueError, match="verified index snapshot"):
+        db.query_hybrid("3", k=3, version=v1, use_index=True, text_field="n")
+    with pytest.raises(ValueError, match="verified index snapshot"):
+        db.query_hybrid_batch(["3"], k=3, version=v1, use_index=True, text_field="n")
 
     plain = VectorDB(
         spark, "pttq", embedding_dim=16, warehouse=str(tmp_path),

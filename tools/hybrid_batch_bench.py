@@ -8,34 +8,33 @@ postings read) REGARDLESS of Q, so the expected shape is: sequential grows
 to BASELINE.md.
 
 Usage: python tools/hybrid_batch_bench.py [Q] [sf_dir]
+
+The session comes from ``session.get_spark``, so parallelism follows
+``SPARK_GRAFT_CPUS`` (default: all cores) and the driver heap
+``SPARK_DRIVER_MEM``.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 Q = int(sys.argv[1]) if len(sys.argv) > 1 else 16
 SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from modal_vector_db_spark.engine import VectorDB
+    from modal_vector_db_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("hybrid_batch_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
